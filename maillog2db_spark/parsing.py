@@ -71,13 +71,15 @@ def header_re(strict_day: bool = True) -> str:
 # Exact-equivalence contract with
 # [regexp_extract(m, pat, i) for i = 1..n], for ALL inputs:
 #
-#   * "^.*?" + pat explores (start position, internal captures) in the
-#     same order as Matcher.find() — the lazy prefix grows only after
+#   * "^.*?(?:" + pat + ")" explores (start position, internal captures)
+#     in the same order as Matcher.find() — the lazy prefix grows only after
 #     every internal configuration at the current start is exhausted —
 #     so the replaced match is the identical leftmost match with
 #     identical captures; the appended "(?s:.*)" consumes any suffix
 #     after the match (without re-emitting it) so the whole input is
-#     rewritten to exactly the n joined groups.
+#     rewritten to exactly the n joined groups. The non-capturing group
+#     keeps a top-level alternation in pat ("a(x)|b(y)") from splitting
+#     the prefix and suffix off its branches, and numbers no group.
 #   * Guarded fallback: rows where the separator byte occurs in the
 #     input (could corrupt the split) or where the split width is not n
 #     (no match: regexp_replace returned the input unchanged) take the
@@ -101,7 +103,7 @@ def regex_groups(m: Column, pat: str, n: int) -> Column:
     assert n >= 2, "no-match detection needs n >= 2 (split width 1 == n)"
     repl = _GROUPS_SEP.join(f"${i}" for i in range(1, n + 1))
     arr = F.split(
-        F.regexp_replace(m, "^.*?" + pat + "(?s:.*)", repl), _GROUPS_SEP, -1
+        F.regexp_replace(m, "^.*?(?:" + pat + ")(?s:.*)", repl), _GROUPS_SEP, -1
     )
     fallback = F.array(*[F.regexp_extract(m, pat, i) for i in range(1, n + 1)])
     return F.when(

@@ -6,6 +6,16 @@ AQE on (runtime skew-join + partition coalescing), shuffle partitions
 sized to parallelism, Arrow enabled for the pandas-UDF paths, session
 timezone pinned to UTC so timestamps compare exactly against external
 oracles.
+
+Partition directories are listed on the driver
+(``PARTITION_LISTING_SERIAL_MAX``). Spark lists the leaf directories of
+a partitioned read with a distributed job of one task per directory
+once there are more than 32 of them — 64 tasks to list one 64-bucket
+state table, once per table per micro-batch in the ingest daemon
+(streaming.ParquetStateStore). The stores this program writes are on
+the local file system (their existence checks and ledgers use ``os``)
+and hold 8-64 buckets: listing them on the driver takes milliseconds,
+while a listing job pays a task launch per directory.
 """
 
 from __future__ import annotations
@@ -24,6 +34,11 @@ from pyspark.sql import SparkSession
 # which explode skips anyway — excluding the rule is semantically free.
 EXCLUDED_OPTIMIZER_RULES = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+# spark.sql.sources.parallelPartitionDiscovery.threshold: above this many
+# directories a read lists them with a Spark job. Well above any bucket
+# count the state stores use (8-64), see the module docstring.
+PARTITION_LISTING_SERIAL_MAX = 1024
+
 
 def get_spark(app_name: str = "maillog2db_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -37,6 +52,8 @@ def get_spark(app_name: str = "maillog2db_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(PARTITION_LISTING_SERIAL_MAX))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/sparklog_warehouse")

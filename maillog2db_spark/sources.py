@@ -88,9 +88,14 @@ def _read_lines(
     if skip_first is None:
         skip_first = start > 0
     with open(path, "rb") as f:
-        f.seek(start)
         if skip_first:
-            f.readline()  # owned by the previous range
+            # the line in progress at `start` is owned by the previous
+            # range; discarding from `start - 1` (Hadoop LineRecordReader)
+            # keeps a line that begins exactly at `start`
+            f.seek(start - 1)
+            f.readline()
+        else:
+            f.seek(start)
         pos = f.tell()
         rem = b""
         while pos < end:

@@ -45,6 +45,20 @@ Merge cost per batch is O(batch + touched-bucket state), independent of
 total history size — the property that lets this run against 100 TB of
 accumulated state. (On a real cluster the same logic is one Delta
 ``MERGE INTO``; plain parquet keeps this repo dependency-free.)
+
+Each table's merge is one write job over one shuffle, and its fixed
+cost is kept to that: the touched buckets are read with the batch
+frame's schema (the stored columns ARE the merge output's columns, so
+no footer-inference job), their directories are listed on the driver
+(``session.PARTITION_LISTING_SERIAL_MAX``), and the union of state and
+batch is hash-partitioned on ``part`` once — ``part`` is a function of
+the key, so the keyed dedup/aggregate reuses that partitioning and the
+write needs no second exchange. The write reads the very buckets it
+overwrites, without materializing them first: dynamic partition
+overwrite stages the job's output under ``.spark-staging-*`` and swaps
+the touched ``part=`` directories in only at job commit, after every
+task has finished reading its input (Spark skips its
+overwrite-while-reading check for this mode for the same reason).
 """
 
 from __future__ import annotations
@@ -56,6 +70,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from . import io, parsing, tables
 
@@ -124,8 +139,14 @@ class ParquetStateStore:
             return ["_lastseen_seq"]
         return []
 
-    def _read_raw(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+    def _read_raw(
+        self, spark: SparkSession, table: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """The stored rows, ``part`` included. ``schema`` pins the read
+        schema instead of inferring it from a parquet footer (one Spark
+        job per read)."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def _with_part(self, df: DataFrame, table: str) -> DataFrame:
         key = TABLE_KEYS[table]
@@ -135,9 +156,15 @@ class ParquetStateStore:
 
     def _merge_write(self, spark: SparkSession, table: str, merged: DataFrame) -> None:
         """Dynamic-partition-overwrite the touched buckets only. The
-        repartition on the bucket column means each task holds exactly
-        one bucket → ONE file per bucket per merge, so file count stays
-        bounded at n_buckets regardless of how many batches ran."""
+        repartition on the bucket column means each task holds whole
+        buckets → ONE file per bucket per merge, so file count stays
+        bounded at n_buckets regardless of how many batches ran. Every
+        merge hands over a frame already hash-partitioned on ``part``
+        (``_with_touched_state``), so Catalyst drops this repartition
+        and the write adds no exchange. Overwriting the buckets the
+        same job reads is safe in this mode: output is staged and the
+        touched ``part=`` directories are replaced only at job commit,
+        after all input has been read."""
         (
             merged.repartition("part")
             .write.mode("overwrite")
@@ -150,20 +177,30 @@ class ParquetStateStore:
         self, spark: SparkSession, table: str, new_with_part: DataFrame
     ) -> DataFrame | None:
         """State rows in the buckets this batch touches — partition-pruned
-        scan; the parts list is ≤ n_buckets ints, safe to collect."""
+        scan; the parts list is ≤ n_buckets ints, safe to collect. The
+        scan is lazy: it runs inside the merge's write job, whose
+        dynamic overwrite commits only after the scan is done (see
+        ``_merge_write``)."""
         if not self.exists(spark, table):
             return None
         parts = [r[0] for r in new_with_part.select("part").distinct().collect()]
         if not parts:
             return None
-        # eager localCheckpoint: (a) breaks lineage so the subsequent write
-        # may overwrite the path being read, (b) bounded — only the touched
-        # buckets' state, never the full table
-        return (
-            self._read_raw(spark, table)
-            .filter(F.col("part").isin(parts))
-            .localCheckpoint(eager=True)
+        return self._read_raw(spark, table, new_with_part.schema).filter(
+            F.col("part").isin(parts)
         )
+
+    def _with_touched_state(
+        self, spark: SparkSession, table: str, new: DataFrame
+    ) -> DataFrame:
+        """The batch plus the stored rows of the buckets it touches,
+        hash-partitioned on ``part``: the merge's one exchange. ``part``
+        is a function of the key, so a dedup or aggregate keyed on
+        ``part`` + key needs no further shuffle."""
+        new = self._with_part(new, table)
+        existing = self._existing_in_parts(spark, table, new)
+        merged = new if existing is None else existing.unionByName(new)
+        return merged.repartition("part")
 
     # --- per-table merges --------------------------------------------------
 
@@ -171,19 +208,14 @@ class ParquetStateStore:
         """logs / deliveries: append with exact-duplicate suppression
         (maillog2db.go:283-306, :395-442) — union touched buckets with the
         batch, dropDuplicates over the full payload key."""
-        key = TABLE_KEYS[table]
-        new = self._with_part(new, table)
-        existing = self._existing_in_parts(spark, table, new)
-        merged = new if existing is None else existing.unionByName(new)
-        self._merge_write(spark, table, merged.dropDuplicates(key))
+        merged = self._with_touched_state(spark, table, new)
+        self._merge_write(spark, table, merged.dropDuplicates(["part", *TABLE_KEYS[table]]))
 
     def merge_clients(self, spark: SparkSession, new_agg: DataFrame) -> None:
         """clients: entity tracking with freshness (maillog2db.go:308-330).
         Re-aggregate union of old+new per key: lastseen from the max-seq
         side, firstseen min, seen_count summed."""
-        new = self._with_part(new_agg, "clients")
-        existing = self._existing_in_parts(spark, "clients", new)
-        merged = new if existing is None else existing.unionByName(new)
+        merged = self._with_touched_state(spark, "clients", new_agg)
         out = merged.groupBy("part", "client", "client_rdns", "client_addr").agg(
             F.max_by("client_lastseen", "_lastseen_seq").alias("client_lastseen"),
             F.min("client_firstseen").alias("client_firstseen"),
@@ -195,9 +227,7 @@ class ParquetStateStore:
     def merge_messages(self, spark: SparkSession, new_agg: DataFrame) -> None:
         """messages: per-queueid keyed merge, each event-type field group
         independently last-writer-wins across batches (maillog2db.go:332-393)."""
-        new = self._with_part(new_agg, "messages")
-        existing = self._existing_in_parts(spark, "messages", new)
-        merged = new if existing is None else existing.unionByName(new)
+        merged = self._with_touched_state(spark, "messages", new_agg)
         aggs = []
         for seq_col, cols in MESSAGE_GROUPS.items():
             aggs += [F.max_by(c, seq_col).alias(c) for c in cols]

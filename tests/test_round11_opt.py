@@ -331,10 +331,13 @@ def test_regex_groups_matches_regexp_extract(spark):
     """regex_groups must agree with per-group regexp_extract on every
     input class: matching lines, non-matching lines (empty-string
     convention), lines where the match starts mid-string, and the
-    separator-byte fallback row."""
+    separator-byte fallback row. The second pattern's top level is an
+    alternation, which must stay one unit inside the anchored rewrite:
+    unwrapped, ``^.*?a(x)|b(y)`` leaves the second branch unanchored and
+    the text before its match leaks into group 1."""
     from maillog2db_spark.parsing import SMTP_RE, regex_groups
 
-    rows = [
+    smtp_rows = [
         ("AB12CD: to=<u@x>, relay=r1[10.0.0.1]:25, delay=0.5, delays=0.1/0/0.2/0.2, dsn=2.0.0, status=sent (ok)",),
         ("NOQUEUE: to=<v@y>, relay=none, delay=1, delays=1/0/0/0, dsn=5.0.0, status=reject (blocked)",),
         ("no match here at all",),
@@ -342,14 +345,16 @@ def test_regex_groups_matches_regexp_extract(spark):
         ("AB12CD: to=<u@x\x01evil>, relay=r1, delay=0.5, delays=0.1/0/0.2/0.2, dsn=2.0.0, status=sent (\x01ok)",),
         ("",),
     ]
-    df = spark.createDataFrame(rows, "m string")
-    got = df.select(regex_groups(F.col("m"), SMTP_RE, 8).alias("g")).collect()
-    want = df.select(
-        F.array(
-            *[F.regexp_extract("m", SMTP_RE, i) for i in range(1, 9)]
-        ).alias("g")
-    ).collect()
-    assert [r.g for r in got] == [r.g for r in want]
+    alternation_rows = [("zzby",), ("ax tail",), ("q ax by",), ("none",)]
+    for pat, n, rows in ((SMTP_RE, 8, smtp_rows), ("a(x)|b(y)", 2, alternation_rows)):
+        df = spark.createDataFrame(rows, "m string")
+        got = df.select(regex_groups(F.col("m"), pat, n).alias("g")).collect()
+        want = df.select(
+            F.array(
+                *[F.regexp_extract("m", pat, i) for i in range(1, n + 1)]
+            ).alias("g")
+        ).collect()
+        assert [r.g for r in got] == [r.g for r in want], pat
 
 
 def test_kcenter_tie_at_bound_refills(spark, monkeypatch):

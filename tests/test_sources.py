@@ -12,6 +12,8 @@ from maillog2db_spark import sources
 
 LINES1 = [f"Aug 13 03:14:{i:02d} mx01 postfix/smtpd[1]: line {i}" for i in range(20)]
 LINES2 = [f"Aug 13 04:00:{i:02d} mx01 postfix/qmgr[2]: more {i}" for i in range(5)]
+# 8 bytes a line with its newline: 64-byte split points fall on line starts
+FIXED = [f"line {i:02d}" for i in range(20)]
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +46,30 @@ def test_batch_read_splits_into_ranges(registered, tmp_path, monkeypatch):
     rows = [r.value for r in df.collect()]
     assert sorted(rows) == sorted(LINES1)  # once each, despite many ranges
     assert len(sources.MaillogBatchReader({"path": str(p)}).partitions()) > 3
+
+    # fixed-width lines: every 64-byte range starts exactly on a line
+    # start, and that line belongs to the range it starts in. Read in
+    # this process: Spark plans the source in a Python worker, which does
+    # not see the patched split size.
+    q = tmp_path / "fixed.log"
+    _write(q, FIXED)
+    reader = sources.MaillogBatchReader({"path": str(q)})
+    parts = reader.partitions()
+    assert [r.start for r in parts] == [0, 64, 128]
+    assert [v.as_py() for r in parts for b in reader.read(r) for v in b.column(0)] == FIXED
+
+
+def test_tail_reader_split_on_line_start(tmp_path, monkeypatch):
+    """A micro-batch span split into ranges that each start on a line
+    start still emits every line once, in order."""
+    monkeypatch.setattr(sources, "STREAM_SPLIT_BYTES", 64)
+    p = tmp_path / "fixed.log"
+    _write(p, FIXED)
+    reader = sources.MaillogTailReader({"path": str(p)})
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    assert [r.start for r in parts] == [0, 64, 128]
+    got = [v.as_py() for r in parts for b in reader.read(r) for v in b.column(0)]
+    assert got == FIXED
 
 
 def _run_stream(spark, path, ckpt):

@@ -11,6 +11,7 @@ must match it exactly.
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,21 +77,29 @@ def baseline(spark, log_dir):
 
 
 @pytest.fixture(scope="module")
-def store(spark, log_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("store")
-    st = streaming.ParquetStateStore(str(out / "state"), n_buckets=8)
-    q = streaming.start_ingest(
-        spark,
-        log_dir,
-        st.root,
-        str(out / "ckpt"),
-        year=YEAR,
-        n_buckets=8,
-        available_now=True,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    return st
+def stores(spark, log_dir, tmp_path_factory):
+    """The fixture logs ingested once per bucket count: 8 buckets, and
+    the daemon's default 64. Every test on these stores checks both.
+    (These few keys touch fewer than 32 buckets, Spark's default
+    parallel-listing threshold; test_merge_batch_spark_work_bounded fills
+    all 64.)"""
+    out = []
+    for n_buckets in (8, 64):
+        d = tmp_path_factory.mktemp(f"store{n_buckets}")
+        st = streaming.ParquetStateStore(str(d / "state"), n_buckets=n_buckets)
+        q = streaming.start_ingest(
+            spark,
+            log_dir,
+            st.root,
+            str(d / "ckpt"),
+            year=YEAR,
+            n_buckets=n_buckets,
+            available_now=True,
+            max_files_per_trigger=1,
+        )
+        q.awaitTermination(120)
+        out.append(st)
+    return out
 
 
 def _ts_plus_100_days(df):
@@ -107,38 +116,42 @@ def _sorted(df, drop=()):
     return [tuple(r) for r in df.orderBy(*df.columns).collect()]
 
 
-def test_stream_equals_batch_logs(spark, store, baseline):
-    assert _sorted(store.read(spark, "logs")) == _sorted(baseline.logs)
-    # 12 lines - 1 inadmissible - 1 exact cross-batch duplicate = 10
-    assert store.read(spark, "logs").count() == 10
+def test_stream_equals_batch_logs(spark, stores, baseline):
+    for store in stores:
+        assert _sorted(store.read(spark, "logs")) == _sorted(baseline.logs)
+        # 12 lines - 1 inadmissible - 1 exact cross-batch duplicate = 10
+        assert store.read(spark, "logs").count() == 10
 
 
-def test_stream_equals_batch_deliveries(spark, store, baseline):
-    assert _sorted(store.read(spark, "deliveries")) == _sorted(baseline.deliveries)
-    # retry at a later ts is a distinct row; exact dup across files is not
-    assert store.read(spark, "deliveries").count() == 3
+def test_stream_equals_batch_deliveries(spark, stores, baseline):
+    for store in stores:
+        assert _sorted(store.read(spark, "deliveries")) == _sorted(baseline.deliveries)
+        # retry at a later ts is a distinct row; exact dup across files is not
+        assert store.read(spark, "deliveries").count() == 3
 
 
-def test_stream_equals_batch_messages(spark, store, baseline):
-    got = _sorted(store.read(spark, "messages"))
-    assert got == _sorted(baseline.messages)
-    by_qid = {r[0]: r for r in got}
-    # cross-batch last-writer-wins: file-1 qmgr re-emit overwrote size/from
-    assert by_qid["AAAA1111"][4] == "999"
-    assert by_qid["AAAA1111"][3] == "<a2@x>"
-    # ...but the smtpd field group from batch 0 survived untouched
-    assert by_qid["AAAA1111"][7] == "one.example.org[10.0.0.1]"
-    assert by_qid["AAAA1111"][8] == "<m1@x>"
+def test_stream_equals_batch_messages(spark, stores, baseline):
+    for store in stores:
+        got = _sorted(store.read(spark, "messages"))
+        assert got == _sorted(baseline.messages)
+        by_qid = {r[0]: r for r in got}
+        # cross-batch last-writer-wins: file-1 qmgr re-emit overwrote size/from
+        assert by_qid["AAAA1111"][4] == "999"
+        assert by_qid["AAAA1111"][3] == "<a2@x>"
+        # ...but the smtpd field group from batch 0 survived untouched
+        assert by_qid["AAAA1111"][7] == "one.example.org[10.0.0.1]"
+        assert by_qid["AAAA1111"][8] == "<m1@x>"
 
 
-def test_stream_equals_batch_clients(spark, store, baseline):
-    assert _sorted(store.read(spark, "clients")) == _sorted(baseline.clients)
-    got = {r[0]: r for r in _sorted(store.read(spark, "clients"))}
-    c = got["one.example.org[10.0.0.1]"]
-    # freshness refreshed across batches; firstseen kept; count summed
-    assert str(c[3]).startswith("2025-08-11 03:00:01")
-    assert str(c[4]).startswith("2025-08-11 01:00:01")
-    assert c[5] == 2
+def test_stream_equals_batch_clients(spark, stores, baseline):
+    for store in stores:
+        assert _sorted(store.read(spark, "clients")) == _sorted(baseline.clients)
+        got = {r[0]: r for r in _sorted(store.read(spark, "clients"))}
+        c = got["one.example.org[10.0.0.1]"]
+        # freshness refreshed across batches; firstseen kept; count summed
+        assert str(c[3]).startswith("2025-08-11 03:00:01")
+        assert str(c[4]).startswith("2025-08-11 01:00:01")
+        assert c[5] == 2
 
 
 def test_streaming_tumbling_counts_match_batch(spark, tmp_path_factory):
@@ -232,37 +245,147 @@ def test_streaming_sessionize_matches_batch_session_window(spark, tmp_path_facto
     assert got == expected
 
 
-def test_state_store_file_count_bounded(spark, store):
+def test_state_store_file_count_bounded(spark, stores):
     """One file per touched bucket per table — file count must not grow
     with batch count."""
     import glob
 
-    for t in ("logs", "messages"):
-        files = glob.glob(os.path.join(store.path(t), "part=*", "*.parquet"))
-        parts = {f.split("part=")[1].split("/")[0] for f in files}
-        assert len(files) == len(parts)  # exactly one file per bucket
+    for store in stores:
+        for t in ("logs", "messages"):
+            files = glob.glob(os.path.join(store.path(t), "part=*", "*.parquet"))
+            parts = {f.split("part=")[1].split("/")[0] for f in files}
+            assert len(files) == len(parts)  # exactly one file per bucket
 
 
-def test_merge_idempotent_and_ledger_skips_redelivery(spark, store, log_dir):
+def test_merge_idempotent_and_ledger_skips_redelivery(spark, stores, log_dir):
     """Replaying all input as a new batch leaves every reference payload
     unchanged (merges are idempotent — the reference's replay-from-start
     semantics, README.md:28); only the derived occurrence counter moves.
-    Re-delivering the SAME batch id again is a full no-op (ledger, ST5)."""
-    before = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
+    Re-delivering the SAME batch id again is a full no-op (ledger, ST5).
+    The replay reads and overwrites the very buckets it touches in one
+    write job."""
     replay = spark.read.text(log_dir)
-    streaming.merge_batch(replay, 99, store, year=YEAR, ledger_ns="replaytest")
-    mid = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
-    assert mid["logs"] == before["logs"]
-    assert mid["deliveries"] == before["deliveries"]
-    assert mid["messages"] == before["messages"]
-    # clients: freshness/identity stable, seen_count doubled
-    assert [r[:5] for r in mid["clients"]] == [r[:5] for r in before["clients"]]
-    assert [r[5] for r in mid["clients"]] == [2 * r[5] for r in before["clients"]]
+    for store in stores:
+        before = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
+        streaming.merge_batch(replay, 99, store, year=YEAR, ledger_ns="replaytest")
+        mid = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
+        assert mid["logs"] == before["logs"]
+        assert mid["deliveries"] == before["deliveries"]
+        assert mid["messages"] == before["messages"]
+        # clients: freshness/identity stable, seen_count doubled
+        assert [r[:5] for r in mid["clients"]] == [r[:5] for r in before["clients"]]
+        assert [r[5] for r in mid["clients"]] == [2 * r[5] for r in before["clients"]]
 
-    # exact re-delivery of a committed (ns, batch_id): complete no-op
-    streaming.merge_batch(replay, 99, store, year=YEAR, ledger_ns="replaytest")
-    after = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
-    assert after == mid
+        # exact re-delivery of a committed (ns, batch_id): complete no-op
+        streaming.merge_batch(replay, 99, store, year=YEAR, ledger_ns="replaytest")
+        after = {t: _sorted(store.read(spark, t)) for t in streaming.TABLE_KEYS}
+        assert after == mid
+
+
+# Spark jobs of one small micro-batch merged into an existing store, all
+# four tables, measured on local[4] with the merge reading state lazily
+# under a pinned schema: 25. It was 40 while each table's merge also
+# listed the buckets with a job, inferred the schema from a footer and
+# checkpointed the touched buckets before writing.
+MERGE_BATCH_JOBS = 25
+
+
+def _jobs_run_by(spark, action) -> list[int]:
+    """Ids of the Spark jobs ``action()`` submits from any thread: the
+    ids between two marker jobs (the scheduler numbers jobs in order)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(name: str) -> list[int]:
+        sc.setJobGroup(name, name)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed asynchronously by the listener bus
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(name) and time.time() < deadline:
+            time.sleep(0.05)
+        return tracker.getJobIdsForGroup(name)
+
+    tag = f"jobs_run_by_{time.time_ns()}"
+    lo = max(marker(tag + "_before"))
+    action()
+    hi = min(marker(tag + "_after"))
+    return list(range(lo + 1, hi))
+
+
+def test_merge_batch_spark_work_bounded(spark, log_dir, tmp_path, monkeypatch):
+    """Per-micro-batch Spark work of the ingest merge, pinned on a small
+    batch merged into an existing 64-bucket store:
+
+    * no job has a task per bucket — the touched buckets are listed on
+      the driver, not by a distributed listing job;
+    * at most MERGE_BATCH_JOBS jobs (no footer-inference or checkpoint
+      jobs);
+    * each table's touched buckets are read with a pinned schema equal
+      (names and types) to the one Spark infers from the stored files,
+      so a merge input whose columns drift from the stored layout fails
+      here instead of reading nulls;
+    * each table's write has exactly one exchange above the state scan:
+      the hash partitioning on ``part`` that the keyed dedup/aggregate
+      and the bucketed write both reuse."""
+    n_buckets = 64
+    store = streaming.ParquetStateStore(str(tmp_path / "state"), n_buckets=n_buckets)
+    # 512 queue ids, clients and deliveries fill every bucket of every
+    # table: a listing job would have one task per bucket
+    lines = []
+    for i in range(512):
+        head = f"Aug 10 01:{i // 60:02d}:{i % 60:02d} mx01 postfix"
+        lines += [
+            f"{head}/smtpd[1]: Q{i:04d}: client=h{i}.example.org[10.0.{i // 256}.{i % 256}]",
+            f"{head}/qmgr[2]: Q{i:04d}: from=<s{i}@x>, size={i}, nrcpt=1 (queue active)",
+            f"{head}/cleanup[3]: Q{i:04d}: message-id=<m{i}@x>",
+            f"{head}/smtp[4]: Q{i:04d}: to=<r{i}@y>, relay=y[20.0.0.2]:25, delay=1, "
+            "delays=0/0/0/1, dsn=2.0.0, status=sent (ok)",
+        ]
+    history = tmp_path / "history.log"
+    history.write_text("\n".join(lines) + "\n")
+    streaming.merge_batch(spark.read.text(str(history)), 0, store, year=YEAR)
+    for t in streaming.TABLE_KEYS:
+        buckets = [e for e in os.listdir(store.path(t)) if e.startswith("part=")]
+        assert len(buckets) == n_buckets, t
+
+    cls = streaming.ParquetStateStore
+    read_raw, merge_write = cls._read_raw, cls._merge_write
+    pinned, plans = {}, {}
+
+    def recording_read(self, spark, table, schema=None):
+        pinned[table] = schema
+        return read_raw(self, spark, table, schema)
+
+    def recording_write(self, spark, table, merged):
+        plans[table] = merged.repartition("part")._jdf.queryExecution().executedPlan().toString()
+        return merge_write(self, spark, table, merged)
+
+    monkeypatch.setattr(cls, "_read_raw", recording_read)
+    monkeypatch.setattr(cls, "_merge_write", recording_write)
+    batch = spark.read.text(os.path.join(log_dir, sorted(FILES)[-1]))
+    jobs = _jobs_run_by(spark, lambda: streaming.merge_batch(batch, 1, store, year=YEAR))
+
+    tracker = spark.sparkContext.statusTracker()
+    tasks = {}
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        assert info is not None, j
+        tasks[j] = max(tracker.getStageInfo(s).numTasks for s in info.stageIds)
+    assert jobs and max(tasks.values()) < n_buckets, tasks
+    assert len(jobs) <= MERGE_BATCH_JOBS, tasks
+
+    assert set(pinned) == set(streaming.TABLE_KEYS)
+    for t, schema in pinned.items():
+        inferred = spark.read.parquet(store.path(t)).schema
+        assert schema is not None, t
+        assert {f.name: f.dataType for f in schema} == {f.name: f.dataType for f in inferred}, t
+        above_state_scan = plans[t].split("Union")[0]
+        assert above_state_scan.count("Exchange") == 1, plans[t]
+        assert "Exchange hashpartitioning(part#" in above_state_scan, plans[t]
 
 
 def test_streaming_interval_join_matches_batch_range_join(spark, tmp_path_factory):
